@@ -24,11 +24,12 @@ object Bench {
     // measured q_kmeans at 7.27 s min-of-2 in-suite vs 1.02 s min-of-3 in a
     // fresh session), and the min of N real end-to-end runs is the standard
     // way to recover the query's actual cost. All runs execute fully
-    // (count() action).
+    // (count() action). A query that throws has no time: the exception
+    // propagates out of timeOnce and runHalf fails the whole bench.
     val runs = 3
     def timeOnce(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
       val t0 = System.nanoTime()
-      try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
+      fn(spark, sfDir).count()
       (System.nanoTime() - t0) / 1e9
     }
     // Host-storm canary: the SAME byte-identical trivial plan sampled at
@@ -51,7 +52,17 @@ object Bench {
       (System.nanoTime() - t0) / 1e9
     }.min
     def runHalf(qs: Seq[(String, (SparkSession, String) => org.apache.spark.sql.DataFrame)]) =
-      qs.map { case (name, fn) => name -> (1 to runs).map(_ => timeOnce(fn)).min }
+      qs.map { case (name, fn) =>
+        val secs =
+          try (1 to runs).map(_ => timeOnce(fn)).min
+          catch { case e: Throwable =>
+            System.err.println(s"Bench: query $name failed: $e")
+            e.printStackTrace()
+            spark.stop()
+            sys.exit(1)
+          }
+        name -> secs
+      }
     val qseq = SparkEntry.queries.toSeq.sortBy(_._1)
     val (half1, half2) = qseq.splitAt(qseq.size / 2)
     val canaryStart = canarySample()
@@ -65,8 +76,8 @@ object Bench {
     val total = results.map(_._2).sum
     val sfName = new java.io.File(sfDir).getName
     // ANN recall regression gate (untimed — not part of the query total):
-    // the C1 floor surfaced into the round artifact so a quantizer/probe/
-    // re-rank regression fails the round mechanically. See RecallGate.
+    // the recall floor surfaced into the round artifact so a quantizer/
+    // probe/re-rank regression fails the round mechanically. See RecallGate.
     val gate: Seq[(String, Long)] =
       try {
         val nVecs = sys.env.getOrElse("GRAFT_BENCH_RECALL_VECS", "20000").toLong

@@ -142,7 +142,17 @@ object Curation {
     * diameter-independent star-contraction clustering (`clusterFn`,
     * default [[DefaultClusterFn]]); the verdict joins five doc-keyed
     * relations —
-    * every shuffle is id- or digest-keyed, nothing is all-pairs. */
+    * every shuffle is id- or digest-keyed, nothing is all-pairs.
+    *
+    * Input contract: `docs` is NOT materialized here. About four gate
+    * subtrees (the scored chain with its trainers, the exact-dup window,
+    * MinHash, the cluster universe) each re-read it, so `docs` must be
+    * deterministic and stable across re-reads — same rows, same ids,
+    * same text on every evaluation (a parquet/table scan is; a
+    * nondeterministic source such as `rand()`, `sample`, or a changing
+    * directory is not). Otherwise the caller must materialize it first
+    * (`localCheckpoint`/`checkpoint`/a written table), or the gates can
+    * disagree about which documents exist. */
   def curateV2(
       docs: DataFrame,
       idCol: String,
@@ -222,7 +232,12 @@ object Curation {
     * Scale posture is the union of the parts: the URL/domain derivation
     * is a kernel projection + one (domain) window cut to `perDomain`;
     * contamination is a broadcast bench-gram semi-join; everything else
-    * as [[curateV2]]. Returns (doc_id, keep, reason). */
+    * as [[curateV2]]. Returns (doc_id, keep, reason).
+    *
+    * Input contract: as [[curateV2]] — `docs` is re-read by several gate
+    * subtrees (plus the domain and contamination gates here), so it must
+    * be deterministic and stable across re-reads, or be materialized by
+    * the caller. */
   def curateV3(
       docs: DataFrame,
       idCol: String,

@@ -145,10 +145,10 @@ object Dedup {
     // Two-stage kept deliberately: an r21 intra-session A/B of this
     // two-stage shape against a fused single-join-pair form (sig and hs
     // attached together, conjunctive filters) measured the fused form
-    // ~35% SLOWER at bench scale (1.66 vs 2.24 s min-of-5 alternating,
-    // ProfileAbR21) — and at scale the fused form also ships hs for
-    // candidates that fail the screen. Narrower rows through the joins
-    // beat fewer joins here.
+    // ~35% SLOWER at bench scale (two-stage 1.66 s vs fused 2.24 s
+    // min-of-5, OPTIMIZATION_r21.md §5) — and at scale the fused form
+    // also ships hs for candidates that fail the screen. Narrower rows
+    // through the joins beat fewer joins here.
     val screened = pairsM
       .join(shCand.select(col("doc_id").as("doc_a"), col("sig").as("sig_a")), Seq("doc_a"))
       .join(shCand.select(col("doc_id").as("doc_b"), col("sig").as("sig_b")), Seq("doc_b"))
@@ -232,9 +232,13 @@ object Dedup {
     *
     * Implementation is iterative min-label propagation: each round joins
     * labels across edges and keeps the per-node minimum, until a round
-    * changes nothing. Rounds needed = graph diameter (near-dup clusters
-    * are shallow; large diameters indicate chained semi-dups and converge
-    * in O(log n) with this doubling-free form too). The driver-side loop
+    * changes nothing. Rounds needed = graph diameter + 1 (near-dup
+    * clusters are shallow; large diameters indicate chained semi-dups,
+    * for which [[clustersStar]] needs only O(log² n) rounds). A graph the
+    * loop cannot finish within `maxRounds` fails with an
+    * `IllegalArgumentException` instead of returning unconverged labels;
+    * graphs of at most `smallGraphMaxEdges` long-id edges are labeled
+    * exactly on the driver and never hit the bound. The driver-side loop
     * is the standard shape for iterative graph algorithms on Spark (GraphX
     * Pregel does the same); `localCheckpoint` cuts the growing lineage so
     * plan size stays constant per round. The result (min id per component)
@@ -315,6 +319,8 @@ object Dedup {
       labels = next
       round += 1
     }
+    require(converged, s"clusters did not converge in $maxRounds rounds " +
+      "— raise maxRounds above the graph diameter, or use clustersStar")
     labelJoin(docs, labels)
   }
 
@@ -795,7 +801,7 @@ object Dedup {
       estSlack: Double = 0.15): DataFrame = {
     val minAgree = math.ceil((minJaccard - estSlack) * perms).toInt
     // two-stage kept: see lshVerifiedPairs — the fused single-join-pair
-    // form measured ~35% slower intra-session (ProfileAbR21)
+    // form measured ~35% slower intra-session (OPTIMIZATION_r21.md §5)
     val screened = cand
       .join(shNew.select(col("new_id"), col("sig").as("sig_a")), Seq("new_id"))
       .join(shHist.select(col("hist_id"), col("sig").as("sig_b")), Seq("hist_id"))

@@ -76,4 +76,30 @@ class ClustersPropertySpec extends SparkSpec {
           s"only-naive: ${(want.toSet -- prop.toSet).take(5)}")
     }
   }
+
+  test("long chains: driver path is exact, the loop converges or fails loudly") {
+    // a path graph longer than the loop's default maxRounds (100): the
+    // small-graph driver path has no round bound and labels one component
+    val longDocs = (0L until 150L)
+    val longPairs = longDocs.zip(longDocs.drop(1))
+    val long = Dedup.clusters(longDocs.toDF("doc_id"), longPairs.toDF("doc_a", "doc_b"))
+      .as[(Long, Long)].collect().toMap
+    assert(long == naive(longDocs, longPairs))
+    assert(long.values.toSet == Set(0L))
+
+    // the distributed loop on a 12-node chain (diameter 11): a bound below
+    // the diameter must throw, not return half-propagated labels
+    val docs = (0L until 12L)
+    val pairs = docs.zip(docs.drop(1))
+    val docsDf = docs.toDF("doc_id")
+    val pairsDf = pairs.toDF("doc_a", "doc_b")
+    val e = intercept[IllegalArgumentException] {
+      Dedup.clusters(docsDf, pairsDf, maxRounds = 4, smallGraphMaxEdges = 0)
+    }
+    assert(e.getMessage.contains("did not converge in 4 rounds"))
+    // a bound above the diameter converges to union-find's fixpoint
+    val loop = Dedup.clusters(docsDf, pairsDf, maxRounds = 20, smallGraphMaxEdges = 0)
+      .as[(Long, Long)].collect().toMap
+    assert(loop == naive(docs, pairs))
+  }
 }

@@ -469,14 +469,20 @@ def fuzz_main(out: str, seed: int, n_msgs: int = 6):
 
 
 def big_main(out: str):
-    """CC_BIG mode (NOT committed; feeds graft.ProfileScan for the CCSDS
-    decode-rate pin): an ensemble-day-shaped file — members x steps
+    """CC_BIG mode (NOT committed; for timing the CCSDS decode rate): an
+    ensemble-day-shaped file — members x steps
     messages on a large grid, bounded-random-walk fields (small deltas,
     the meteorological shape -> mostly k-split blocks with zero runs and
     the occasional uncompressed block). Python-loop encoding is slow;
     sized for minutes of one-time generation, not the full 985 M-cell E1.
       CC_BIG=1 python3 tools/make_grib_ccsds_fixture.py /tmp/big_ccsds.grib2
-    Env: CC_NI/CC_NJ/CC_MEMBERS/CC_STEPS/CC_SEED."""
+    Env: CC_NI/CC_NJ/CC_MEMBERS/CC_STEPS/CC_SEED.
+    Time it with a full read into Spark's `noop` sink, which decodes every
+    column of every row:
+      spark.read.format("graft.sources.GribSource").load("/tmp/big_ccsds.grib2")
+        .write.format("noop").mode("overwrite").save()
+    Per-layer GRIB decode numbers on a generated day come from
+    `python3 perfbench/run.py --workload flood_day --trace 1`."""
     import os
     global NI, NJ
     NI = int(os.environ.get("CC_NI", "320"))

@@ -23,12 +23,18 @@ exact float32 widening, 2^E and 10^D exact for the chosen E/D).
 Run once, commit outputs:
   python3 tools/make_grib_complex_fixture.py
 
-Big mode (NOT committed; feeds graft.ProfileScan for the complex-packing
-decode-rate pin): an E1-shaped ensemble day — 51 members x 6 steps on a
+Big mode (NOT committed; for timing the complex-packing decode rate): an
+E1-shaped ensemble day — 51 members x 6 steps on a
 920x700 grid (~197 M cells) — complex-packed with the order cycling
 0/1/2 across members. Uses a legal uniform-group-width encoding
 (widthBits=0) so numpy can vectorize the bit packing:
   GC_BIG=1 python3 tools/make_grib_complex_fixture.py /tmp/big_complex.grib2
+Time it with a full read into Spark's `noop` sink, which decodes every
+column of every row:
+  spark.read.format("graft.sources.GribSource").load("/tmp/big_complex.grib2")
+    .write.format("noop").mode("overwrite").save()
+Per-layer GRIB decode numbers on a generated day come from
+`python3 perfbench/run.py --workload flood_day --trace 1`.
 """
 import calendar
 import os

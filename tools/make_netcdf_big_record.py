@@ -10,8 +10,10 @@ time(time). 94.6 M cells per variable, recsize ~= 3.1 MB, ~1.1 GB total.
 
 Usage:
   python3 tools/make_netcdf_big_record.py [/tmp/bigrecord.nc]
-then:
-  SPARK_GRAFT_CPUS=32 sbt 'runMain graft.ProfileScan /tmp/bigrecord.nc netcdf'
+then time a full read into Spark's `noop` sink, which decodes every
+column of every row:
+  spark.read.format("graft.sources.NetcdfSource").load("/tmp/bigrecord.nc")
+    .write.format("noop").mode("overwrite").save()
 """
 import struct
 import sys
